@@ -36,9 +36,21 @@ object Sessions {
         sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "3g"))
     }
 
+  /** Apply the engine's settings to a session builder.
+    *
+    * Streaming checkpoints go through [[LocalCheckpointFileManager]]:
+    * offset/commit logs and state-store files under a `file:` path are
+    * committed with java.nio instead of Hadoop's `FileContext`, which
+    * forks `chmod` and `readlink` per file without Hadoop's native
+    * library. Those local files no longer get `.crc` sidecars
+    * (checkpoints written before keep theirs and still verify). Remote
+    * schemes (HDFS, S3, ...) keep exactly Spark's default manager.
+    */
   def tune(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     masterOverride(b)
       .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
+      .config(LocalCheckpointFileManager.ManagerClassKey,
+        classOf[LocalCheckpointFileManager].getName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.NumericType
 
 /** Window ("selection policy") operators.
   *
@@ -71,6 +72,13 @@ object Windows {
     * dropped) — semantics pinned by selection_policy_test.go:67-95.
     *
     * Emits (window_id, row) pairs; callers aggregate over window_id.
+    *
+    * The global form (no `partitionBy`) needs a single numeric order key
+    * and throws `IllegalArgumentException` naming the key otherwise (a
+    * string key would cast to null and put every row in window 0). It
+    * runs jobs when the transform is applied, not when the result is
+    * consumed: a checkpoint of the input, a quantile sketch, and a
+    * per-bucket totals collect (`Packing.globalCumsumWithTotal`).
     */
   def countingWindowIds(orderBy: Seq[Column], n: Int, shift: Int,
       partitionBy: Seq[Column] = Nil): DataFrame => DataFrame = {
@@ -97,9 +105,13 @@ object Windows {
         // single numeric, non-null, unique order key (true for the
         // event_id callers); with duplicate keys the rank among equal
         // keys is tie-order-arbitrary in BOTH formulations.
-        require(orderBy.size == 1,
-          "global counting windows need a single numeric order key " +
-            "(the per-key variant takes arbitrary orderBy columns)")
+        val keyTypes = df.select(orderBy: _*).schema.map(_.dataType)
+        if (keyTypes.size != 1 || !keyTypes.head.isInstanceOf[NumericType])
+          throw new IllegalArgumentException(
+            "countingWindowIds: the global form needs a single numeric " +
+              s"order key, got ${orderBy.mkString(", ")} of type " +
+              s"${keyTypes.map(_.simpleString).mkString(", ")} (the " +
+              "per-key variant takes arbitrary orderBy columns)")
         val (cum, total) = Packing.globalCumsumWithTotal(
           df, orderBy.head, lit(1L), "_cum1")
         cum.withColumn("_rn", col("_cum1") - 1).drop("_cum1")

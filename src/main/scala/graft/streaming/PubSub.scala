@@ -192,6 +192,10 @@ final class Subscription[T](
 
   private var closed = false
 
+  /** The id of the streaming query behind this subscription — the key of
+    * its progress in Spark's listeners and in [[MetricsListener]]. */
+  def queryId: java.util.UUID = query.id
+
   /** Set by PubSub after registration: removes this subscription from
     * the registry's live list on close, so migrate drains and teardown
     * never iterate subscriptions that were already closed.

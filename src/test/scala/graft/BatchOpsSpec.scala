@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -52,6 +52,20 @@ class BatchOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // skip n=2 shift=3: rows 2, 5, 8 fall in no window
     val skip = ids(2, 3)
     assert(skip.values.flatten.toSet == Set(0L, 1L, 3L, 4L, 6L, 7L, 9L))
+  }
+
+  test("global counting windows reject a non-numeric or multi-column key by name") {
+    val df = Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("s", "id")
+    def err(keys: Column*): String = intercept[IllegalArgumentException](
+      Windows.countingWindowIds(keys, 2, 2)(df)).getMessage
+    // a string key would cast to null and put every row in window 0
+    assert(err(col("s")).contains("countingWindowIds"))
+    assert(err(col("s")).contains("string"))
+    assert(err(col("id"), col("s")).contains("single numeric order key"))
+    assert(err().contains("single numeric order key"))
+    // the per-key form still orders by any column
+    assert(Windows.countingWindowIds(Seq(col("s")), 2, 2,
+      partitionBy = Seq(col("id")))(df).count() == 3)
   }
 
   test("counting window agg fires only complete windows (ref :144-146)") {

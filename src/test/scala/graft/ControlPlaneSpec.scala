@@ -190,6 +190,32 @@ class ControlPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.streams.removeListener(metrics)
   }
 
+  test("metrics listener folds trigger phases and state for a stateful subscription") {
+    val ps = new PubSub(spark)
+    val metrics = Metrics.install(spark)
+    val t = ps.topic[Int]("metered-windows")
+    val sub = ps.subscribeBatch(t.stream, CountingWindowPolicy(5, 5))(_ => ())
+    val id = sub.queryId
+    (0 until 3).foreach { b =>
+      t.publish(envs(b * 10 until b * 10 + 12))
+      sub.drain()
+    }
+    // listener events are async — wait for the batches' progress
+    val deadline = System.currentTimeMillis() + 10000
+    while (metrics.stateRowsTotal(id).isEmpty &&
+      System.currentTimeMillis() < deadline) Thread.sleep(100)
+    sub.close()
+    assert(metrics.commitMsP50(id).exists(_ >= 0))
+    assert(metrics.addBatchMsP50(id).exists(_ >= 0))
+    assert(metrics.stateCommitMsP50(id).exists(_ >= 0))
+    // one global counting-window group holds the state
+    assert(metrics.stateRowsTotal(id) === Some(1L))
+    // a query the listener never saw has no samples
+    assert(metrics.commitMsP50(java.util.UUID.randomUUID()).isEmpty)
+    ps.close()
+    spark.streams.removeListener(metrics)
+  }
+
   test("restart resumes from committed offsets — no event loss or dup") {
     val ps = new PubSub(spark)
     val received = mutable.Buffer.empty[Int]
